@@ -7,6 +7,7 @@ import hashlib
 import math
 
 import duckdb
+import numpy as np
 
 
 def canon(cols, rows):
@@ -134,3 +135,32 @@ SELECT corr(epa_per_play, lag_epa_per_play) AS yoy_epa_per_play,
        count(lag_epa_per_play) AS n_pairs
 FROM l
 """
+
+
+# ---- streaming --------------------------------------------------------------
+
+
+def embgate_verdicts(verdicts, batch_ids, seen_ids, emb, threshold: float) -> bool:
+    """One verdict per vector of the batch, and each dropped vector's
+    ``dup_of`` is a vector seen so far at exact cosine of at least
+    ``threshold`` (so a vector with no such partner is kept)."""
+    got = {r["vec_id"]: (r["keep"], r["dup_of"]) for r in verdicts}
+    if sorted(got) != sorted(int(i) for i in batch_ids):
+        return False
+    unit = emb / np.linalg.norm(emb, axis=1, keepdims=True)
+    seen = {int(i) for i in seen_ids}
+    return all(
+        keep == 1 or (dup_of in seen and dup_of != vid and unit[dup_of] @ unit[vid] >= threshold - 1e-6)
+        for vid, (keep, dup_of) in got.items()
+    )
+
+
+def curation_counts(counts, n_submitted: int, n_kept: int) -> bool:
+    """The curation report adds up: every submitted doc entered the
+    funnel once, and the near-dup survivors are exactly the docs the
+    batches returned as kept."""
+    return (
+        sum(r["n_input"] for r in counts) == n_submitted
+        and sum(r["n_neardup"] for r in counts) == n_kept
+        and all(r["n_neardup"] <= r["n_final"] <= r["n_input"] for r in counts)
+    )

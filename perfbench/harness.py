@@ -18,6 +18,7 @@ A workload supplies these hooks (see ``workloads.py``):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -194,6 +195,7 @@ class Run:
             "seed": self.seed,
             "trace": self.trace,
             "size": self.size,
+            "config": wl.cfg,
             "env": env,
             "metrics": {k: v[0] for k, v in metrics.items()},
             "layer": self.layer,
@@ -205,25 +207,42 @@ class Run:
         with open(os.path.join(self.out_dir, f"run-{tag}-t{int(self.trace)}.json"), "w") as f:
             json.dump(record, f, indent=1)
         if self.trace:
-            record["tracing_overhead"] = self._overhead(tag, metrics)
+            record["tracing_overhead"] = self._overhead(metrics, wl.cfg)
             self.tracer.dump(os.path.join(self.out_dir, f"trace-{tag}.json"), record)
         shutil.rmtree(self.work, ignore_errors=True)
         return {"metrics": metrics, "env": env, "record": record}
 
-    def _overhead(self, tag: str, metrics: dict) -> dict | None:
-        """End-to-end difference between this traced run and the
-        untraced run of the same workload, size and seed, when one
-        has been recorded in this checkout."""
-        path = os.path.join(self.out_dir, f"run-{tag}-t0.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            base = json.load(f)["metrics"]
-        return {
-            k: {"untraced": base[k], "traced": metrics[k][0],
-                "delta_pct": 100.0 * (metrics[k][0] - base[k]) / base[k] if base[k] else None}
-            for k in ("op_p50_s", "ops_per_s", "setup_s")
-        }
+    def _overhead(self, metrics: dict, cfg: dict) -> dict:
+        """End-to-end difference between this traced run and the median
+        of the untraced runs of the same workload and sizes recorded in
+        this checkout (any seed). A difference no larger than those
+        runs' own spread (IQR over median) is marked unresolved; with
+        fewer than three runs there is no spread to resolve it against."""
+        runs = []
+        for path in glob.glob(os.path.join(self.out_dir, f"run-{self.workload}-{self.size}-s*-t0.json")):
+            with open(path) as f:
+                rec = json.load(f)
+            if rec.get("config") == cfg:
+                runs.append(rec["metrics"])
+        out = {"untraced_runs": len(runs), "metrics": {}}
+        if not runs:
+            return out
+        for k in ("op_p50_s", "ops_per_s", "setup_s"):
+            vals = [r[k] for r in runs]
+            med = statistics.median(vals)
+            if not med:
+                continue
+            spread = None
+            if len(vals) >= 3:
+                q1, _, q3 = statistics.quantiles(vals, n=4)
+                spread = (q3 - q1) / med
+            delta = (metrics[k][0] - med) / med
+            out["metrics"][k] = {
+                "untraced_median": med, "traced": metrics[k][0], "delta_pct": 100.0 * delta,
+                "spread_pct": None if spread is None else 100.0 * spread,
+                "resolved": spread is not None and abs(delta) > spread,
+            }
+        return out
 
     def _layer_from_counters(self) -> None:
         steady = [c for c in self.op_counters if c["steady"]]

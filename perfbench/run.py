@@ -40,8 +40,10 @@ def _environment(work: str) -> None:
     )
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
-    # the JVM's temp files too (and no hsperfdata file under /tmp)
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
+    # the JVM's temp files too, after any options the caller set
+    os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
+        o for o in (os.environ.get("JAVA_TOOL_OPTIONS"), f"-Djava.io.tmpdir={os.environ['TMPDIR']}") if o
+    )
     sys.path[:0] = [ROOT, HERE]
 
 
@@ -94,10 +96,17 @@ def main(argv=None) -> int:
         with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
             layers = json.load(f)["per_layer"]
         metrics = {m["name"]: (float(run.layer.get(m["name"], 0.0)), m["unit"]) for m in layers}
-        ov = res["record"].get("tracing_overhead")
-        if ov:
-            print("# tracing overhead vs the untraced run of this seed: " + ", ".join(
-                f"{k} {v['delta_pct']:+.1f}%" for k, v in ov.items() if v["delta_pct"] is not None))
+        ov = res["record"]["tracing_overhead"]
+        if not ov["metrics"]:
+            print("# tracing overhead: not measured (no untraced run of this workload and size "
+                  "is recorded in .perfbench_out)")
+        else:
+            print(f"# tracing overhead vs the median of {ov['untraced_runs']} untraced runs: " + ", ".join(
+                f"{k} {v['delta_pct']:+.1f}%"
+                + ("" if v["resolved"] else " (unresolved: " + (
+                    f"within the untraced spread of {v['spread_pct']:.0f}%)" if v["spread_pct"] is not None
+                    else "fewer than 3 untraced runs)"))
+                for k, v in ov["metrics"].items()))
     else:
         metrics = res["metrics"]
     for k, (v, u) in metrics.items():

@@ -24,7 +24,10 @@ ROOT = os.path.dirname(HERE)
 
 # layer spans each workload must emit in its traced run
 SPANS = {
-    "query_mix": {"session.start", "catalog.load", "queries.build", "queries.plan", "queries.exec"},
+    "query_mix": {
+        "session.start", "catalog.load", "queries.build", "queries.plan", "queries.exec",
+        "streaming.curation", "streaming.embgate",
+    },
     "warehouse_lifecycle": {
         "session.start", "jobs.rebuild", "jobs.sanity", "jobs.append", "plans.analysis",
         "plans.freshness_report", "plans.team_pass_rates", "plans.lag_panel",

@@ -54,7 +54,9 @@ class QueryMix(Workload):
     OP_NAME = "query"
     WARM_PASSES = 1  # untimed passes after the checked one
     # stride: every stride-th query of the 50-query driver window
-    SIZES = {"bench": {"sf": 0.001, "stride": 4}, "tiny": {"sf": 0.001, "stride": 10}}
+    SIZES = {"bench": {"sf": 0.01, "stride": 4}, "tiny": {"sf": 0.001, "stride": 10}}
+    STREAM_BATCHES = 2  # the second batch probes state the first one grew
+    EMB_THRESHOLD = 0.9
 
     def generate(self) -> None:
         from nfl_data_pipeline_spark.queries import PRIORITY, all_queries
@@ -140,6 +142,70 @@ class QueryMix(Workload):
         r.layer["queries.build_jobs"] = (
             sum(c["by_group"].get("queries.build", 0) for c in steady) / max(1, len(steady))
         )
+        self._stream(spark)
+
+    def _stream(self, spark) -> None:
+        """The streaming layer, in the traced run only and after the timed
+        loop: the fixture's documents and embeddings, split by seed into
+        micro-batches, each through the curation chain and the embedding
+        gate against the state the earlier batches grew."""
+        from pyspark.sql import functions as F
+
+        from nfl_data_pipeline_spark.streaming.curation import (
+            CurationState,
+            process_curation_batch,
+            read_curation_counts,
+        )
+        from nfl_data_pipeline_spark.streaming.embdedup import EmbDedupState, process_embdedup_batch
+
+        root = os.path.join(self.run.work, "stream")
+        cur = CurationState(os.path.join(root, "curation"), track_frequent=True)
+        gate = EmbDedupState(os.path.join(root, "embdedup"))
+        nb = self.STREAM_BATCHES
+        docs, vecs = self.tables["documents"], self.tables["embeddings"]
+        rng = np.random.default_rng([self.run.seed, 7])
+        doc_ids = np.array_split(rng.permutation(self.rows["documents"]), nb)
+        vec_ids = np.array_split(rng.permutation(self.rows["embeddings"]), nb)
+        emb = pq.read_table(os.path.join(self.sf_dir, "embeddings.parquet"), columns=["embedding"])
+        emb = np.asarray(emb.column("embedding").combine_chunks().flatten(), dtype=np.float64).reshape(
+            self.rows["embeddings"], -1
+        )
+        kept_docs = []
+        commits = []
+
+        for i in range(nb):
+            def batch(i=i):
+                before = _commits(root)
+                d = docs.filter(F.col("doc_id").isin(doc_ids[i].tolist()))
+                v = vecs.filter(F.col("vec_id").isin(vec_ids[i].tolist()))
+                with self.phase(spark, "streaming.curation"):
+                    n_kept = process_curation_batch(spark, d, cur, f"b{i}").count()
+                with self.phase(spark, "streaming.embgate"):
+                    verdicts = process_embdedup_batch(
+                        spark, v, gate, f"b{i}", threshold=self.EMB_THRESHOLD, engine="arrow"
+                    ).collect()
+                kept_docs.append(n_kept)
+                commits.append(_commits(root) - before)
+                seen = np.concatenate(vec_ids[: i + 1])
+                return lambda: check.embgate_verdicts(verdicts, vec_ids[i], seen, emb, self.EMB_THRESHOLD)
+
+            self.run.op(f"stream-b{i}", batch, steady=False, name="stream_batch")
+        counts = read_curation_counts(spark, cur).collect()
+        self.run.check("streaming.curation_counts", len(kept_docs) == nb and check.curation_counts(
+            counts, self.rows["documents"], sum(kept_docs)
+        ))
+        r = self.run
+        r.layer["streaming.curation_s"] = r.span_mean("streaming.curation")
+        r.layer["streaming.embgate_s"] = r.span_mean("streaming.embgate")
+        r.layer["streaming.kept_ratio"] = sum(kept_docs) / self.rows["documents"]
+        r.layer["streaming.commits_per_batch"] = sum(commits) / nb
+        r.layer["streaming.state_files_per_batch"] = sum(map(os.path.isfile, _files(root, "*"))) / nb
+        r.layer["streaming.state_mb"] = _bytes(root) / 2**20
+
+
+def _commits(root: str) -> int:
+    """Tx-table commits under ``root``: one numbered manifest each."""
+    return sum(os.path.basename(p)[:-5].isdigit() for p in _files(root, "*.json") if "_txlog" in p)
 
 
 # ---- warehouse_lifecycle ------------------------------------------------
