@@ -43,25 +43,6 @@ def exact_dedup_keys(df: DataFrame, key_cols: list[str], id_col: str) -> DataFra
     )
 
 
-def _texthash_engine() -> str:
-    """Engine for the per-character text-hash folds: ``sql``
-    (interpreted HOFs, the local default) or ``arrow`` (the
-    exact-order numpy kernels in operators/arrowfold — bit-identical,
-    proven by tools/arrowfold_equiv.py).
-
-    Scale dial, not a correctness dial: at sf0.1 the SQL fold wins
-    wall (the corpus is KB-per-task, so the ~0.2 s/task Python-runner
-    cost exceeds the entire fold; measured 0.23 vs 0.43 s) while at
-    corpus scale the per-character interpreter cost dominates and the
-    kernel is the right engine (~25× per-row, arrowfold_micro) —
-    export SPARK_GRAFT_TEXTHASH_ENGINE=arrow there. Results are
-    bit-identical either way, so registries and oracle hashes do not
-    depend on the setting."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_TEXTHASH_ENGINE", "sql")
-
-
 def with_shingle_ids(
     df: DataFrame, text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -71,14 +52,8 @@ def with_shingle_ids(
     ~10× cheaper than hashing every shingle string (the HOF path is
     interpreted, so per-character work dominates). ``n`` threads into
     the Horner composition (default 3-grams, the oracle-pinned
-    config). Engine per :func:`_texthash_engine`.
+    config).
     """
-    if _texthash_engine() == "arrow":
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            shingle_sids_udf,
-        )
-
-        return df.withColumn("sids", shingle_sids_udf(n)(F.col(text_col)))
     t = df.withColumn("tokens", F.split(F.col(text_col), " "))
     t = t.withColumn("th", F.expr(sp_token_hashes("tokens")))
     return t.withColumn(
@@ -227,12 +202,6 @@ def with_minhash_signature(
     or wider banding pass their own constants (e.g.
     hashing.gate_minhash_perms)."""
     use = MINHASH_PERMS if perms is None else perms
-    if _texthash_engine() == "arrow":
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            minhash_signature_arrow,
-        )
-
-        return minhash_signature_arrow(df_sids, use)
     out = df_sids
     for i, (a, b) in enumerate(use):
         out = out.withColumn(
@@ -639,6 +608,9 @@ def registry_winner_verdicts(
         comp_rows, node_t = uf
         reg_hits: set = set()
         if reg_nodes is not None and comp_rows:
+            # only _reg == 1 rows are registry members — the same
+            # contract the distributed path's coalesce applies
+            reg_nodes = reg_nodes.filter(F.col("_reg") == 1)
             nodes_f = local_frame(
                 spark,
                 [(n,) for n, _ in comp_rows],

@@ -69,29 +69,17 @@ def cosine_topk(
     fast path for the verify-heavy regime (SCALING.md). Cosines can
     differ from the fold at the last ulp (different summation order),
     so adjacent ranks may swap on near-ties: the retrieved id-SET is
-    the contract.
-
-    ``engine="exact"`` (r13) scores the dots with the exact-order
-    Arrow kernel (operators/arrowfold.exact_fold_dot): vectorized like
-    ``arrow`` but BIT-IDENTICAL to the SQL fold — same ranks, same
-    cosines — so oracle-gated callers can use it.
+    the contract (pinned by test_multimodal_sources's
+    ``test_cosine_topk_arrow_matches_sql_fold``). Oracle-gated callers
+    use the ``sql`` engine.
     """
-    if engine not in ("sql", "arrow", "exact"):
+    if engine not in ("sql", "arrow"):
         raise ValueError(
-            f"unknown engine {engine!r}: expected 'sql', 'arrow' or "
-            "'exact'"
+            f"unknown engine {engine!r}: expected 'sql' or 'arrow'"
         )
     q = F.broadcast(_prep(queries, id_col, vec_col, "q", dim))
     c = _spread(_prep(candidates, id_col, vec_col, "c", dim))
-    if engine == "exact":
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            exact_fold_dot,
-        )
-
-        cos = exact_fold_dot("q_vec", "c_vec") / (
-            F.col("q_norm") * F.col("c_norm")
-        )
-    elif engine == "arrow":
+    if engine == "arrow":
         import numpy as np
 
         @F.pandas_udf("double")
@@ -802,10 +790,10 @@ def _dedup_from_assignments(
     # cluster it probes (bytes ~ corpus, not ~ pairs), and only the
     # narrow (vid, cosine) pair rows come back. Cosines are
     # bit-identical to the SQL fold (exact-order per-dimension
-    # accumulation — see operators/arrowfold.py for the argument;
-    # equality asserted by tools/arrowfold_equiv.py and the oracle
-    # suite), and the threshold filter stays in Spark, so the
-    # decision semantics are unchanged. Per-group state is O(c²) for
+    # accumulation — the argument is in _grouped_pair_scores; equality
+    # is gated by the semantic_dedup oracle query), and the threshold
+    # filter stays in Spark, so the decision semantics are unchanged.
+    # Per-group state is O(c²) for
     # cluster size c — bounded by the auto-k ~512 target, the same
     # bound the old join's per-cid fan-in lived under.
     import pyspark.sql.types as T
@@ -952,9 +940,10 @@ def plane_matrix(spark, n_planes: int, dim: int):
     Python murmur3 mirror (hashing.plane_weight, the same mirror the
     oracle inlines), so building it costs zero Spark jobs (r13; the
     previous spark.range + collect ran one job per operator
-    invocation). Mirror fidelity is pinned end-to-end: the arrow_exact
+    invocation). Mirror fidelity is pinned end-to-end: the arrow
     engine's band values must equal the SQL path's, which folds over
-    Spark's own ``hash`` (tools/arrowfold_equiv.py, tests)."""
+    Spark's own ``hash`` (test_embedding_lsh's
+    ``test_arrow_engine_matches_sql_band_values``)."""
     import numpy as np
 
     from nfl_data_pipeline_spark.operators.hashing import plane_weight
@@ -981,21 +970,13 @@ def hyperplane_band_struct(
     the two can never drift). The incremental gate checkpoints THIS
     frame (the vector is pinned once, not ``n_bands`` times) and
     derives narrow band-probe rows and the vector side table from it
-    (r13 — guide §2.3: shuffle keys, not payloads)."""
-    c = _prep(df, id_col, vec_col, "c", dim)
-    if engine == "arrow_exact":
-        # exact-order Arrow kernel: BIT-IDENTICAL to the SQL path
-        # (per-dimension accumulation preserves the projection fold's
-        # IEEE op order — operators/arrowfold.py; asserted by
-        # tools/arrowfold_equiv.py incl. NULL/short-vector edges), so
-        # oracle-gated callers can use it, unlike the matmul engine
-        # below whose summation order can flip a near-zero sign.
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            exact_band_vals_udf,
+    (r13 — guide §2.3: shuffle keys, not payloads). Engines as in
+    ``hyperplane_band_rows``."""
+    if engine not in ("sql", "arrow"):
+        raise ValueError(
+            f"unknown engine {engine!r}: expected 'sql' or 'arrow'"
         )
-
-        bv = exact_band_vals_udf(df.sparkSession, band_bits, n_bands, dim)
-        return c.withColumn("_hbs", bv(F.col("c_vec")))
+    c = _prep(df, id_col, vec_col, "c", dim)
     if engine == "arrow":
         import numpy as np
 
@@ -1111,14 +1092,11 @@ def embedding_near_dups_banded(
                 df.sparkSession, "vec_a long, vec_b long, cosine double"
             )
         dim = int(probe[0])
-    # Projections stay the SQL engine: the arrow_exact kernel is
-    # bit-identical and ~2.7x on the projection stage in isolation,
-    # but end-to-end the Python-stage fixed cost showed up as ~+0.5 s
-    # in the controlled bench while the 10x-tier win proved to live
-    # almost entirely in the PAIR stage below (SCALING.md r13) —
-    # interpreted projections are ~0.2 s of well-parallelized wall
-    # even at 10x. arrow_exact remains an available engine for
-    # registries that want it (hyperplane_band_struct).
+    # Projections stay the SQL engine: this operator is oracle-gated
+    # (dedup_embedding_banded) and the matmul engine's summation order
+    # can flip a near-zero sign. The 10x-tier win lives almost
+    # entirely in the PAIR stage below (SCALING.md r13) — interpreted
+    # projections are ~0.2 s of well-parallelized wall even at 10x.
     bands = hyperplane_band_rows(
         df, id_col, vec_col, band_bits, n_bands, dim
     )
@@ -1134,7 +1112,8 @@ def embedding_near_dups_banded(
             F.col("_bn") <= max_bucket
         ).drop("_bn")
     # Pair-stage engine, gated on the (already materialized) band-row
-    # count — both forms are bit-identical (tools/arrowfold_equiv.py):
+    # count — both forms are bit-identical (test_pair_kernel's
+    # ``test_banded_pair_stage_join_and_kernel_agree``):
     #
     # - SMALL inputs: the band self-join with the dim-unrolled dot.
     #   Its per-pair cost only hurts when pair volume is large; below
@@ -1154,7 +1133,7 @@ def embedding_near_dups_banded(
     # per bucket), kernel cost is ~fixed (one boundary crossing +
     # one exchange). 20k rows (~5k vectors at 4 bands) sits well
     # inside the measured win region of each side.
-    if n_band_rows > _pair_kernel_min_rows():
+    if n_band_rows > _PAIR_KERNEL_MIN_ROWS:
         return (
             _grouped_pair_scores(
                 bands.select(
@@ -1204,11 +1183,8 @@ def embedding_near_dups_banded(
 
 # Band-row count above which embedding_near_dups_banded's pair stage
 # switches from the self-join to the grouped kernel (see the gate
-# comment in the operator). Env-overridable for scale studies.
-def _pair_kernel_min_rows() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PAIR_KERNEL_MIN_ROWS", 20_000))
+# comment in the operator).
+_PAIR_KERNEL_MIN_ROWS = 20_000
 
 
 def _grouped_pair_scores(
@@ -1227,16 +1203,20 @@ def _grouped_pair_scores(
     merge components across already-registered winners. This is the
     incremental-gate candidate shape (streaming/embdedup.py).
 
-    Bit-identity contract (tools/arrowfold_equiv.py): the dot is the
+    Bit-identity contract (test_pair_kernel's
+    ``test_banded_pair_stage_join_and_kernel_agree``): the dot is the
     per-dimension accumulation over ``vec[:dim]`` — the same IEEE op
-    sequence as the dim-unrolled ``sp_dot`` — and the cosine divides
-    by the CARRIED ``c_norm`` product, so the values equal the join
-    form's bit for bit. Rows whose vector is NULL or shorter than
-    ``dim`` produced a NULL cosine in the join form (``element_at``
-    past the end), as did zero-norm-product pairs (Spark's divide
-    yields NULL on a zero divisor, NOT IEEE inf/NaN), and every NULL
-    cosine was dropped by the caller's threshold filter; the kernel
-    never emits them.
+    sequence as the dim-unrolled ``sp_dot``, vectorized across pairs
+    rather than reordered within one (float64 add/mul are single
+    correctly-rounded ops on the JVM and in numpy; BLAS dot/einsum
+    are NOT used because they reorder the sum) — and the cosine
+    divides by the CARRIED ``c_norm`` product, so the values equal
+    the join form's bit for bit. Rows whose vector is NULL or shorter
+    than ``dim`` produced a NULL cosine in the join form
+    (``element_at`` past the end), as did zero-norm-product pairs
+    (Spark's divide yields NULL on a zero divisor, NOT IEEE inf/NaN),
+    and every NULL cosine was dropped by the caller's threshold
+    filter; the kernel never emits them.
 
     Execution shape: hash-repartition on the group key, sort within
     partitions by (group, side, id), then ONE ``mapInArrow`` pass that

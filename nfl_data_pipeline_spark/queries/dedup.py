@@ -707,16 +707,6 @@ _ES_MIN_RUN = 2  # >= 2 consecutive shared windows => span >= 9 tokens
 _ES_MAX_DF = 16  # ignore windows present in more docs (prefix filter)
 
 
-def _es_spark_windows() -> str:
-    """Spark SQL: array of polynomial ids of every w-token window."""
-    return (
-        f"CASE WHEN size(th) < {_ES_W} THEN array() "
-        f"ELSE transform(sequence(0, size(th) - {_ES_W}), i -> "
-        f"aggregate(slice(th, i + 1, {_ES_W}), cast(0 as bigint), "
-        f"(s, h) -> (s * {A} + h) % {P})) END"
-    )
-
-
 def _es_duck_windows() -> str:
     return (
         f"list_transform(range(1, len(th) - {_ES_W - 2}), i -> "

@@ -57,14 +57,7 @@ def get_spark(
         # --- local-harness sizing ---------------------------------------------
         .config(
             "spark.sql.shuffle.partitions",
-            str(
-                shuffle_partitions
-                or int(
-                    os.environ.get(
-                        "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_CPUS
-                    )
-                )
-            ),
+            str(shuffle_partitions or DEFAULT_CPUS),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

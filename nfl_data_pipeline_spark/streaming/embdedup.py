@@ -108,10 +108,13 @@ def process_embdedup_batch(
     # scores probe-probe (a < b) and probe-registry (a ≠ b) pairs in
     # segment-vectorized numpy with the exact fold order of the SQL
     # engine's dim-unrolled dot, and never emits registry-registry
-    # pairs. Verdicts are therefore bit-identical to the SQL engine
-    # BY CONSTRUCTION for both engine settings (previously the arrow
-    # engine's einsum could in principle flip a knife-edge pair; the
-    # equivalence test pinned zero flips empirically).
+    # pairs. The VERIFY stage is therefore bit-identical to the SQL
+    # engine by construction for both engine settings. Candidate
+    # generation is not: under engine="arrow" the band projections
+    # above still come from the BLAS matmul projector, whose summation
+    # order can flip a near-zero projection's sign. Its agreement with
+    # the SQL projector is pinned only empirically
+    # (test_embedding_lsh's test_arrow_engine_matches_sql_band_values).
     from nfl_data_pipeline_spark.operators.similarity import (
         _grouped_pair_scores,
     )

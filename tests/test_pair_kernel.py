@@ -3,12 +3,12 @@ grouped pair scorer (operators/similarity._grouped_pair_scores — the
 banded near-dup and embedding-gate verify engine) and the
 driver-side winner resolution in registry_winner_verdicts.
 
-The broader bit-identity evidence lives in tools/arrowfold_equiv.py
-(hex-compared against the SQL folds over the real corpora); these
-tests pin the SEMANTIC contracts that the join forms enforced
-structurally: pair orientation, side rules, zero-norm NULL-division
-behavior, multi-batch segment carry, and registry-first-arrival
-winner selection.
+Both sides of the banded operator's pair-stage gate are run over the
+same edge-case frame and hex-compared; the other tests pin the
+SEMANTIC contracts that the join forms enforced structurally: pair
+orientation, side rules, zero-norm NULL-division behavior,
+multi-batch segment carry, and registry-first-arrival winner
+selection (on both the driver and the distributed union-find path).
 """
 
 from __future__ import annotations
@@ -172,42 +172,92 @@ def test_winner_verdicts_no_registry(spark):
     assert got == {5: (5, 1), 6: (6, 1), 7: (6, 0)}
 
 
-def test_texthash_engine_dial_is_bit_identical(spark, monkeypatch):
-    """SPARK_GRAFT_TEXTHASH_ENGINE=arrow must reproduce the SQL text
-    hash pipeline exactly — sids element ORDER included (the gate
-    registries and oracle hashes must not depend on the dial)."""
-    from nfl_data_pipeline_spark.operators.dedup import (
-        with_minhash_signature,
-        with_shingle_ids,
-    )
-    from nfl_data_pipeline_spark.operators.hashing import (
-        gate_minhash_perms,
-    )
+def test_banded_pair_stage_join_and_kernel_agree(spark, monkeypatch):
+    """embedding_near_dups_banded on both sides of its band-row gate —
+    the self-join form and the grouped kernel — returns the same
+    pairs with hex-equal cosines, edge vectors included: NULL,
+    shorter than ``dim`` (NULL cosine), longer than ``dim`` (prefix
+    dot) and zero (NULL division)."""
+    import random
 
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta alpha beta gamma"),
-            (2, "x y"),
-            (3, None),
-            (4, "répète répète répète répète"),
-        ],
-        "doc_id long, text string",
-    )
-    perms = gate_minhash_perms(8)
+    from nfl_data_pipeline_spark.operators import similarity
 
-    def snap():
-        sids = with_shingle_ids(docs).select("doc_id", "sids")
-        sig = with_minhash_signature(sids, perms)
+    dim = 8
+    rng = random.Random(13)
+    base = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
+    # a few planted near-duplicates so high cosines occur too
+    base += [[x + rng.uniform(-0.01, 0.01) for x in v] for v in base[:6]]
+    null_id, short_id, long_id, zero_id = 1000, 1001, 1002, 1003
+    rows = [(i, v) for i, v in enumerate(base)] + [
+        (null_id, None),
+        (short_id, base[1][: dim - 1]),
+        (long_id, base[0] + [0.5, 0.5, 0.5]),  # same bands as id 0
+        (zero_id, [0.0] * dim),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def run(min_rows):
+        monkeypatch.setattr(similarity, "_PAIR_KERNEL_MIN_ROWS", min_rows)
+        out = similarity.embedding_near_dups_banded(
+            df, threshold=-2.0, band_bits=4, n_bands=2, dim=dim
+        )
+        return {(r["vec_a"], r["vec_b"]): r["cosine"] for r in out.collect()}
+
+    joined = run(10**12)
+    kernel = run(0)
+    assert joined, "the fixture must produce candidate pairs"
+    assert set(joined) == set(kernel)
+    assert {k: v.hex() for k, v in joined.items()} == {
+        k: v.hex() for k, v in kernel.items()
+    }
+    assert (0, long_id) in joined
+    for a, b in joined:
+        assert not {a, b} & {null_id, short_id, zero_id}
+
+
+def test_winner_verdicts_ignore_non_registry_rows_on_both_paths(
+    spark, monkeypatch
+):
+    """A ``_reg = 0`` row in ``reg_nodes`` is NOT a registry member:
+    the driver union-find path and the distributed fallback must give
+    the same verdicts, with the batch doc judged like any other."""
+    from nfl_data_pipeline_spark.operators import dedup
+
+    base = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3)], "doc_a long, doc_b long"
+    )
+    # doc 2 appears with _reg = 0; doc 100 is a real registry row
+    # outside every component
+    reg = spark.createDataFrame([(2, 0), (100, 1)], "doc_id long, _reg int")
+
+    def verdicts():
         return {
-            r["doc_id"]: (
-                list(r["sids"]),
-                tuple(r[f"mh{i}"] for i in range(8)),
-            )
-            for r in sig.collect()
+            r["doc_id"]: (r["dup_of"], r["keep"])
+            for r in dedup.registry_winner_verdicts(
+                spark, base, edges, reg
+            ).collect()
         }
 
-    monkeypatch.delenv("SPARK_GRAFT_TEXTHASH_ENGINE", raising=False)
-    sql_snap = snap()
-    monkeypatch.setenv("SPARK_GRAFT_TEXTHASH_ENGINE", "arrow")
-    arrow_snap = snap()
-    assert sql_snap == arrow_snap
+    driver = verdicts()
+    monkeypatch.setattr(dedup, "_union_find_rows", lambda *a, **k: None)
+    distributed = verdicts()
+    assert driver == distributed == {1: (1, 1), 2: (1, 0), 3: (1, 0)}
+
+
+def test_removed_vector_engines_are_rejected(spark):
+    """One engine set per operator: ``sql`` and ``arrow`` only."""
+    from nfl_data_pipeline_spark.operators.similarity import (
+        cosine_topk,
+        hyperplane_band_struct,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError):
+        cosine_topk(df, df, engine="exact")
+    with pytest.raises(ValueError):
+        hyperplane_band_struct(
+            df, "vec_id", "embedding", 4, 2, 2, engine="exact"
+        )
