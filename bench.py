@@ -7,8 +7,11 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is executed to completion through the noop sink — unlike
 count(), which lets Catalyst prune away per-row expression work, the
 noop write forces every output column to be computed while still
-avoiding driver-side materialization. One warm-up pass pays
-JVM/codegen warm-up before measurement.
+avoiding driver-side materialization. A warm-up query pays JVM
+start-up before measurement. The first timed pass pays each key's
+code generation; later passes hit the generated-class cache, because
+session.py sizes it above the registry's working set. The detail
+line's ``codegen_compiles`` records each key's compiles per pass.
 """
 
 from __future__ import annotations
@@ -120,14 +123,26 @@ def main() -> None:
     # (noisy neighbor); the min reports the engine's cost, not the
     # machine's worst moment.
     samples: dict[str, list[float]] = {}
+    # Janino compiles per key and pass (exact CodegenMetrics counter
+    # delta, read outside the timed bracket): a key that recompiles on
+    # every pass is cache thrash or a per-call literal, not compute.
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: dict[str, list[int]] = {}
+
+    def timed(name: str, fn) -> None:
+        c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        t0 = time.perf_counter()
+        fn()
+        dt = round(time.perf_counter() - t0, 4)
+        c1 = codegen.METRIC_COMPILATION_TIME().getCount()
+        samples.setdefault(name, []).append(dt)
+        compiles.setdefault(name, []).append(c1 - c0)
+
     for pass_ix in range(3):
         for name, spec in sorted(specs.items()):
             if pass_ix == 2 and name not in min3_keys:
                 continue
-            t0 = time.perf_counter()
-            run(spec.spark(spark, SF_DIR))
-            dt = round(time.perf_counter() - t0, 4)
-            samples.setdefault(name, []).append(dt)
+            timed(name, lambda: run(spec.spark(spark, SF_DIR)))
 
     # Domain pipelines at reference scale (~1.2M-row NFL-shaped fact
     # table, BASELINE.md): lifecycle rebuild/append + the epa lag
@@ -158,10 +173,7 @@ def main() -> None:
         for pass_ix in range(3 if min3_pipeline else 2):
             base = f"{scratch}/pass{pass_ix}/pbp"
             for name, fn in pipeline_keys:
-                t0 = time.perf_counter()
-                fn(spark, base)
-                dt = round(time.perf_counter() - t0, 4)
-                samples.setdefault(name, []).append(dt)
+                timed(name, lambda: fn(spark, base))
             shutil.rmtree(f"{scratch}/pass{pass_ix}", ignore_errors=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -197,7 +209,8 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # Full per-query detail, one line, for humans/logs — includes
-    # the per-key spread and the load-average stamps.
+    # the per-key spread, compiles per pass and the load-average
+    # stamps.
     print(
         json.dumps(
             {
@@ -205,6 +218,7 @@ def main() -> None:
                 "queries": timings,
                 "spread": spread,
                 "gates": gates,
+                "codegen_compiles": compiles,
                 "load_start": load_start,
                 "load_end": load_end,
                 "sf": sf_val,

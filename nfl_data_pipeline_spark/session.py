@@ -43,6 +43,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Generated-class cache (static conf, LRU, default 100). It must
+        # hold the working set, or every class is evicted before its
+        # query comes round again and each pass recompiles everything:
+        # one query_mix pass generates 226 classes, and the 117-query
+        # registry at sf0.01 1,545 distinct classes on its first pass
+        # (SCALING.md, "Generated-code cache working set").
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # --- python/arrow boundary -------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # python data sources (sources/txsource.py) prune at the

@@ -124,6 +124,8 @@ _SMOKE_MODULES = {
     "test_profile_hist",
     # r13: the segment-vectorized pair kernels' semantic contracts
     "test_pair_kernel",
+    # generated classes survive between passes (session.py cache size)
+    "test_codegen_cache",
 }
 
 
