@@ -674,9 +674,19 @@ def _assign_nearest(
 TARGET_CLUSTER_SIZE = 512
 
 
-def _auto_k(df: DataFrame, id_col: str) -> int:
-    n = df.select(id_col).count()
-    return max(8, n // TARGET_CLUSTER_SIZE)
+def _rows_and_width(v: DataFrame) -> tuple[int, int]:
+    """``(row count, vector width)`` of a (vid, vec) frame in ONE job:
+    the count drives the adaptive k, the width is the pair kernel's
+    fixed ``dim``. NULL vectors are skipped (they join no pair); mixed
+    widths raise, because the k-means distance fold is undefined for
+    ragged input. A frame with no non-NULL vector has width 0."""
+    width = F.when(F.col("vec").isNotNull(), F.size("vec"))
+    n, lo, hi = v.agg(F.count("*"), F.min(width), F.max(width)).first()
+    if lo != hi:
+        raise ValueError(
+            f"semantic_dedup needs one vector width, got {lo} to {hi}"
+        )
+    return n, hi or 0
 
 
 def semantic_dedup(
@@ -712,7 +722,7 @@ def semantic_dedup(
 
     Scale posture: two broadcast-join assignment passes (centroids are
     k rows), one explode+hash-agg for the update (map-side combine on
-    (cid, pos)), and an intra-cluster self-join whose fan-in is the
+    (cid, pos)), and an intra-cluster pair kernel whose fan-in is the
     cluster size, never the corpus.
 
     ``k=None`` (the default) derives k = max(8, n // 512) from the
@@ -721,19 +731,20 @@ def semantic_dedup(
     moment the corpus is 10× the one it was tuned on. Pass an
     explicit k to pin a configuration (the oracle query does).
     """
-    if k is None:
-        k = _auto_k(df, id_col)
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
+    n, dim = _rows_and_width(v)
+    if k is None:
+        k = max(8, n // TARGET_CLUSTER_SIZE)
     cents1 = fit_centroids(v, k)
-    # the probed assignment feeds four consumers (both pair legs, the
-    # drop set, the output projection); materialize it once — without
-    # this the crossJoin+window assignment subtree replays per
-    # consumer (ReuseExchange reuses only identical shuffle subtrees)
+    # the probed assignment feeds two consumers (the pair kernel and
+    # the output projection); materialize it once — without this the
+    # crossJoin+window assignment subtree replays per consumer
+    # (ReuseExchange reuses only identical shuffle subtrees)
     probed = _assign_nearest(v, cents1, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold)
+    return _dedup_from_assignments(probed, id_col, threshold, dim)
 
 
 def fit_centroids(v: DataFrame, k: int) -> DataFrame:
@@ -769,97 +780,31 @@ def fit_centroids(v: DataFrame, k: int) -> DataFrame:
 
 
 def _dedup_from_assignments(
-    probed: DataFrame, id_col: str, threshold: float
+    probed: DataFrame, id_col: str, threshold: float, dim: int
 ) -> DataFrame:
     """Pair/drop/report stage shared by every clustering backend:
     ``probed`` is a materialized (vid, vec, cid, rn) table (rn = 1 is
-    the primary cell; rn > 1 are probe cells)."""
-    # (r12's re-spread guard is gone with the pair join it served:
-    # the grouped kernel below shuffles by cid itself, and its
-    # per-cluster numpy cost is microseconds — the single-task
-    # straggler the guard fixed cannot recur.)
+    the primary cell; rn > 1 are probe cells) of ``dim``-wide vectors.
+
+    Each cluster's pairs are scored by the shared segment kernel
+    (``_grouped_pair_scores``), its sided mode carrying the probe
+    rule: primary rows are side 0 and probe rows side 1, so primary
+    pairs are scored once, primary-probe pairs always and probe-probe
+    pairs never. The carried norm is the SQL fold, so cosines equal
+    the oracle's bit for bit; the higher id of a pair at or above the
+    threshold is dropped."""
     a2 = probed.filter(F.col("rn") == 1).select("vid", "vec", "cid")
-
-    # Pair scoring (r13, guide §8 / §4.2): the r12 shape joined the
-    # two vector-carrying legs and evaluated the interpreted cosine
-    # fold once per PAIR — per-pair interpreter cost, and any Arrow
-    # rewrite of that expression ships every vector once per pair
-    # through the Python boundary (measured 0.35-0.61x at sf0.1).
-    # Instead, group by cid and score each cluster's pairs in ONE
-    # numpy kernel: every vector crosses the boundary once per
-    # cluster it probes (bytes ~ corpus, not ~ pairs), and only the
-    # narrow (vid, cosine) pair rows come back. Cosines are
-    # bit-identical to the SQL fold (exact-order per-dimension
-    # accumulation — the argument is in _grouped_pair_scores; equality
-    # is gated by the semantic_dedup oracle query), and the threshold
-    # filter stays in Spark, so the decision semantics are unchanged.
-    # Per-group state is O(c²) for
-    # cluster size c — bounded by the auto-k ~512 target, the same
-    # bound the old join's per-cid fan-in lived under.
-    import pyspark.sql.types as T
-
-    vid_field = next(f for f in probed.schema.fields if f.name == "vid")
-    pair_schema = T.StructType(
-        [
-            T.StructField("vid", vid_field.dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    members = with_norm(probed).select(
+        "cid",
+        F.col("vid").alias("c_id"),
+        F.col("vec").alias("c_vec"),
+        F.col("norm").alias("c_norm"),
+        (F.col("rn") > 1).cast("int").alias("c_side"),
     )
-
-    def _score_cluster(pdf):
-        import numpy as np
-        import pandas as pd
-
-        vids = pdf["vid"].to_numpy()
-        order = np.argsort(vids, kind="stable")
-        pdf = pdf.iloc[order]
-        vids = pdf["vid"].to_numpy()
-        rn = pdf["rn"].to_numpy()
-        vecs = pdf["vec"].tolist()
-        d = next((len(v) for v in vecs if v is not None), 0)
-        ok = np.fromiter(
-            (v is not None and len(v) == d for v in vecs),
-            bool,
-            count=len(vecs),
-        )
-        m = int(ok.sum())
-        if m < 2 or d == 0:
-            return pd.DataFrame(
-                {"vid": vids[:0], "cosine": np.zeros(0)}
-            )
-        V = np.stack(
-            [np.asarray(v, dtype=np.float64) for v, g in zip(vecs, ok) if g]
-        )
-        svids = vids[ok]
-        srn = rn[ok]
-        # exact-order folds, vectorized across rows/pairs: step j
-        # adds one product into each accumulator — the SQL fold's op
-        # sequence per row/pair (NOT a BLAS matmul, which reorders)
-        nrm = np.zeros(m)
-        dots = np.zeros((m, m))
-        for j in range(d):
-            cj = V[:, j]
-            nrm += cj * cj
-            dots += np.outer(cj, cj)
-        nrm = np.sqrt(nrm)
-        nprod = np.outer(nrm, nrm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cosm = dots / nprod
-        iu, il = np.triu_indices(m, k=1)
-        # zero-norm pairs: Spark's divide yields NULL (dropped by the
-        # threshold filter), not IEEE NaN — match it (see
-        # _grouped_pair_scores)
-        keep = ((srn[iu] == 1) | (srn[il] == 1)) & (nprod[iu, il] != 0.0)
-        return pd.DataFrame(
-            {"vid": svids[il][keep], "cosine": cosm[iu, il][keep]}
-        )
-
     dropped = (
-        probed.select("vid", "vec", "cid", "rn")
-        .groupBy("cid")
-        .applyInPandas(lambda _, pdf: _score_cluster(pdf), pair_schema)
+        _grouped_pair_scores(members, ["cid"], dim, side_col="c_side")
         .filter(F.col("cosine") >= F.lit(threshold))
-        .select("vid")
+        .select(F.greatest("a_id", "b_id").alias("vid"))
         .distinct()
     )
     wsz = Window.partitionBy("cid")
@@ -896,12 +841,13 @@ def semantic_dedup_ml(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    if k is None:
-        k = _auto_k(df, id_col)
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
+    n, dim = _rows_and_width(v)
+    if k is None:
+        k = max(8, n // TARGET_CLUSTER_SIZE)
     feats = v.withColumn("features", array_to_vector("vec"))
     km = KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="features").fit(
         feats
@@ -915,7 +861,7 @@ def semantic_dedup_ml(
         "cid int, cvec array<double>",
     )
     probed = _assign_nearest(v, cents, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold)
+    return _dedup_from_assignments(probed, id_col, threshold, dim)
 
 
 def _hyperplane_proj(vec_col: str, plane_id: int, dim: int) -> str:
@@ -988,16 +934,33 @@ def hyperplane_band_struct(
         def band_vals(vecs):
             import pandas as pd
 
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            bits = (V @ bc.value) > 0  # (n, planes)
-            vals = [
-                (bits[:, b * band_bits : (b + 1) * band_bits] @ weights)
-                for b in range(n_bands)
-            ]
-            out = np.stack(vals, axis=1)  # (n, n_bands)
-            return pd.Series(list(out))
+            # the SQL projector's contract: project the first ``dim``
+            # elements; a NULL or shorter vector has a NULL projection
+            # (``element_at`` past the end), so every band value is 0
+            ok = np.fromiter(
+                (v is not None and len(v) >= dim for v in vecs),
+                bool,
+                count=len(vecs),
+            )
+            out = np.zeros((len(vecs), n_bands), dtype=np.int64)
+            if ok.any():
+                V = np.stack(
+                    [
+                        np.asarray(v[:dim], dtype=np.float64)
+                        for v, g in zip(vecs, ok)
+                        if g
+                    ]
+                )
+                bits = (V @ bc.value) > 0  # (n, planes)
+                out[ok] = np.stack(
+                    [
+                        bits[:, b * band_bits : (b + 1) * band_bits]
+                        @ weights
+                        for b in range(n_bands)
+                    ],
+                    axis=1,
+                )
+            return pd.Series(list(out), dtype=object)
 
         return c.withColumn("_hbs", band_vals(F.col("c_vec")))
     for b in range(n_bands):
@@ -1197,11 +1160,16 @@ def _grouped_pair_scores(
     segment-vectorized exact-order kernel.
 
     Without ``side_col``: all unordered pairs, a_id < b_id. With
-    ``side_col`` (0 = probe/batch row, 1 = registry row): probe-probe
-    pairs once with a_id < b_id, plus every (probe, registry) pair
-    with a_id != b_id — and NEVER registry-registry, whose edges would
-    merge components across already-registered winners. This is the
-    incremental-gate candidate shape (streaming/embdedup.py).
+    ``side_col``: side-0 pairs once with a_id < b_id, plus every
+    (side 0, side 1) pair with a_id != b_id (a_id is the side-0 row) —
+    and NEVER side 1 with side 1. Two callers use the sided mode:
+
+    - the incremental embedding gate (streaming/embdedup.py): 0 =
+      probe/batch row, 1 = registry row; registry-registry edges would
+      merge components across already-registered winners;
+    - ``semantic_dedup``'s pair stage: 0 = a vector's primary cell,
+      1 = a probe cell; a probe row pairs only with the cell's primary
+      members.
 
     Bit-identity contract (test_pair_kernel's
     ``test_banded_pair_stage_join_and_kernel_agree``): the dot is the
@@ -1221,7 +1189,7 @@ def _grouped_pair_scores(
     Execution shape: hash-repartition on the group key, sort within
     partitions by (group, side, id), then ONE ``mapInArrow`` pass that
     detects group segments and scores every partition's pairs in a
-    handful of numpy calls — groupBy().applyInPandas here cost ~3 ms
+    handful of numpy calls — a grouped-map pandas host cost ~3 ms
     of Python round-trip PER GROUP (1024 LSH buckets → ~3 s, measured
     r13). Incomplete trailing groups are carried across Arrow batches,
     so batch boundaries never split a group's pair set. Each vector
@@ -1296,9 +1264,16 @@ def _grouped_pair_scores(
                 + np.repeat(np.asarray(seg_starts)[seg_of], counts)
             )
             acc = np.zeros(total)
-            for j in range(dim):
-                cj = V[:, j]
-                acc += cj[a_idx] * cj[b_idx]
+            # score in blocks of pairs so each dimension's gathers stay
+            # in cache: a batch of ~10 groups of ~500 rows scored in one
+            # block runs ~2x slower. Each pair's op sequence is unchanged.
+            blk = 1 << 16
+            for lo in range(0, total, blk):
+                a, b = a_idx[lo : lo + blk], b_idx[lo : lo + blk]
+                part = acc[lo : lo + blk]
+                for j in range(dim):
+                    cj = V[:, j]
+                    part += cj[a] * cj[b]
             nprod = norms[a_idx] * norms[b_idx]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / nprod

@@ -140,11 +140,19 @@ def test_arrow_engine_matches_sql_band_values(spark, vecs):
     """The numpy matmul path signs against the SAME hash-derived
     planes as the SQL fold: identical band values on the fixture
     (zero float-noise sign flips measured), ~2 orders faster per
-    vector (SCALING.md)."""
+    vector (SCALING.md). Edge rows follow the SQL contract too: a
+    NULL or shorter-than-``dim`` vector has band value 0 on every
+    band, a longer one is projected on its first ``dim`` elements."""
     from nfl_data_pipeline_spark.operators.similarity import (
         hyperplane_band_rows,
     )
 
+    v0 = vecs.filter(F.col("vec_id") == 0).first()["embedding"]
+    edges = spark.createDataFrame(
+        [(20_000, None), (20_001, v0[: DIM - 1]), (20_002, v0 + [0.5] * 3)],
+        "vec_id long, embedding array<double>",
+    )
+    vecs = vecs.unionByName(edges)
     kw = dict(band_bits=8, n_bands=4, dim=DIM)
     sql_rows = {
         (r["c_id"], r["band_id"]): r["band_val"]
@@ -159,6 +167,9 @@ def test_arrow_engine_matches_sql_band_values(spark, vecs):
         ).collect()
     }
     assert sql_rows == arrow_rows
+    for b in range(4):
+        assert sql_rows[(20_000, b)] == sql_rows[(20_001, b)] == 0
+        assert sql_rows[(20_002, b)] == sql_rows[(0, b)]
 
 
 def test_gated_fixture_recall_and_bucket_bounds(spark):

@@ -1,14 +1,16 @@
 """Focused tests for the r13 segment-vectorized pair kernels: the
 grouped pair scorer (operators/similarity._grouped_pair_scores — the
-banded near-dup and embedding-gate verify engine) and the
-driver-side winner resolution in registry_winner_verdicts.
+banded near-dup, embedding-gate verify and semantic_dedup pair engine)
+and the driver-side winner resolution in registry_winner_verdicts.
 
 Both sides of the banded operator's pair-stage gate are run over the
 same edge-case frame and hex-compared; the other tests pin the
 SEMANTIC contracts that the join forms enforced structurally: pair
-orientation, side rules, zero-norm NULL-division behavior,
-multi-batch segment carry, and registry-first-arrival winner
-selection (on both the driver and the distributed union-find path).
+orientation, side rules (the gate's probe/registry and
+semantic_dedup's primary/probe), zero-norm NULL-division behavior,
+multi-batch segment carry, semantic_dedup's input contract, and
+registry-first-arrival winner selection (on both the driver and the
+distributed union-find path).
 """
 
 from __future__ import annotations
@@ -122,6 +124,27 @@ def test_segment_carry_across_arrow_batches(spark):
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", old
         )
+
+
+def test_many_pair_blocks_match_the_exact_order_fold(spark):
+    """A group with more pairs than one scoring block (2**16) gives
+    the same cosines as the per-pair fold, bit for bit."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    m, dim = 400, 4  # 79,800 pairs
+    X = rng.standard_normal((m, dim))
+    norms = np.sqrt((X * X).sum(axis=1))
+    rows = [(1, i, X[i].tolist(), float(norms[i])) for i in range(m)]
+    got = _scores(spark, rows, dim=dim)
+    a_idx, b_idx = np.triu_indices(m, k=1)
+    dot = np.zeros(len(a_idx))
+    for j in range(dim):
+        dot += X[a_idx, j] * X[b_idx, j]
+    want = dot / (norms[a_idx] * norms[b_idx])
+    assert got == {
+        (int(a), int(b)): float(c) for a, b, c in zip(a_idx, b_idx, want)
+    }
 
 
 def test_winner_verdicts_driver_path_matches_contract(spark):
@@ -261,3 +284,108 @@ def test_removed_vector_engines_are_rejected(spark):
         hyperplane_band_struct(
             df, "vec_id", "embedding", 4, 2, 2, engine="exact"
         )
+
+
+def test_semantic_dedup_probe_rule_matches_numpy_reference(spark):
+    """semantic_dedup's pair stage on a hand-built probed table:
+    primary-primary pairs once, primary-probe pairs always (whichever
+    id is lower), probe-probe pairs never, zero-norm vectors never.
+    The dropped ids equal a numpy reference of that rule."""
+    import numpy as np
+
+    from nfl_data_pipeline_spark.operators.similarity import (
+        _dedup_from_assignments,
+    )
+
+    # (vid, vec, cid, rn)
+    rows = [
+        (1, _vec(1, 0, 0), 0, 1),
+        (2, _vec(1, 0.01, 0), 0, 1),     # primary-primary with 1
+        (9, _vec(0, 0, 0), 0, 1),        # zero norm
+        (5, _vec(1, 0, 0.01), 0, 2),     # probe, near 1 and 2
+        (6, _vec(1, 0, 0.02), 0, 3),     # probe, near 1, 2 and 5
+        (3, _vec(0, 1, 0), 1, 1),
+        (0, _vec(0, 1, 0.005), 1, 2),    # probe with a LOWER id than 3
+        (7, _vec(0, 0, 1), 1, 2),        # probe-probe only with 8
+        (8, _vec(0, 0, 1.01), 1, 2),
+        (0, _vec(0, 1, 0.005), 2, 1),
+        (5, _vec(1, 0, 0.01), 3, 1),
+        (6, _vec(1, 0, 0.02), 4, 1),
+        (7, _vec(0, 0, 1), 5, 1),
+        (8, _vec(0, 0, 1.01), 6, 1),
+    ]
+    threshold = 0.9
+
+    def reference(probe_probe):
+        drops = set()
+        for cid in {r[2] for r in rows}:
+            cell = sorted(r for r in rows if r[2] == cid)
+            for i, (va, xa, _, ra) in enumerate(cell):
+                for vb, xb, _, rb in cell[i + 1 :]:
+                    if ra > 1 and rb > 1 and not probe_probe:
+                        continue
+                    a, b = np.array(xa), np.array(xb)
+                    nprod = np.linalg.norm(a) * np.linalg.norm(b)
+                    if nprod and a @ b / nprod >= threshold:
+                        drops.add(max(va, vb))
+        return drops
+
+    probed = spark.createDataFrame(
+        rows, "vid long, vec array<double>, cid int, rn int"
+    )
+    out = _dedup_from_assignments(probed, "vec_id", threshold, 3)
+    got = {r["vec_id"] for r in out.collect() if r["is_kept"] == 0}
+    assert got == reference(probe_probe=False) == {2, 3, 5, 6}
+    # the fixture exercises the rule: scoring probe pairs would drop 8
+    assert 8 in reference(probe_probe=True)
+    # one row per vector, in its primary cell
+    assert out.count() == len({r[0] for r in rows})
+
+
+def test_semantic_dedup_with_probes_on_smoke_fixture(spark):
+    from nfl_data_pipeline_spark.catalog import load
+    from nfl_data_pipeline_spark.operators.similarity import semantic_dedup
+    from tests.conftest import SF_SMOKE
+
+    e = load(spark, SF_SMOKE, "embeddings")
+    out = semantic_dedup(e, k=4, n_probe=2).collect()
+    assert len(out) == e.count() == len({r["vec_id"] for r in out})
+
+
+def test_semantic_dedup_rejects_mixed_widths(spark):
+    """Ragged input raises instead of silently losing the rows whose
+    width differs from their cluster's first row; NULL vectors are
+    skipped, not counted as a width."""
+    from nfl_data_pipeline_spark.operators.similarity import (
+        semantic_dedup,
+        semantic_dedup_ml,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    ragged = spark.createDataFrame(
+        [(1, _vec(1, 0)), (2, _vec(1, 0, 0)), (3, _vec(1, 0.01))], schema
+    )
+    with pytest.raises(ValueError, match="one vector width"):
+        semantic_dedup(ragged, k=1)
+    with pytest.raises(ValueError, match="one vector width"):
+        semantic_dedup_ml(ragged, k=1)
+    with_null = spark.createDataFrame(
+        [(1, _vec(1, 0)), (2, None), (3, _vec(1, 0.01))], schema
+    )
+    got = {
+        r["vec_id"]: r["is_kept"]
+        for r in semantic_dedup(with_null, k=1, threshold=0.9).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 0}
+
+
+def test_semantic_dedup_empty_frame(spark):
+    from nfl_data_pipeline_spark.operators.similarity import semantic_dedup
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = semantic_dedup(empty)
+    assert out.schema.simpleString() == (
+        "struct<vec_id:bigint,cluster_id:int,cluster_size:bigint,"
+        "is_kept:int>"
+    )
+    assert out.count() == 0

@@ -198,11 +198,14 @@ def test_bigram_logprob_no_window_over_pairs(spark):
 
 def test_semantic_dedup_bounded_plan(spark):
     # the k-means assignment is materialized once (checkpoint); the
-    # pairwise stage joins on the cluster id — never a cartesian over
-    # the corpus
+    # pairwise stage groups on the cluster id — never a cartesian over
+    # the corpus — and is scored by the shared mapInArrow segment
+    # kernel, not a per-group pandas round trip
     plan = plan_of(spark, "semantic_dedup")
     assert "CartesianProduct" not in plan
     assert plan.count("Window") <= 1
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInArrow" in plan
 
 
 def test_domain_mixture_aggregates_before_single_partition(spark):
